@@ -28,7 +28,8 @@ order within a subject, sorted across subjects (reference report.py:27-33).
 
 from __future__ import annotations
 
-from typing import Mapping
+import functools
+from typing import Callable, Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -40,6 +41,10 @@ from . import messages as M
 from .columns import compile_checker, render_reason
 
 VIOLATION_SCHEMA = "subject string, rule_id string, rule_seq int, reason string"
+
+# One rule's violations, or a callable that builds them once a Spark job
+# has decided how (see CompiledPlan.violation_parts()).
+ViolationPart = DataFrame | Callable[[], DataFrame]
 
 # Per-row violation element carried through the fused scan.
 _ROW_ERR_TYPE = "array<struct<rule_seq:int,rule_id:string,reason:string>>"
@@ -156,6 +161,7 @@ class CompiledPlan:
         self.spark = df.sparkSession
         self._fused: DataFrame | None = None
         self._observation = None  # created lazily in fused_projection
+        self._bad_keys: list[DataFrame] = []  # equality screens, cached
 
     # -- fused projection ---------------------------------------------------
     #
@@ -284,6 +290,12 @@ class CompiledPlan:
         return fused
 
     def release(self) -> None:
+        """Unpersist the equality bad-key caches, then the fused
+        projection they read."""
+        from ..functions import cache
+
+        cache.release(*self._bad_keys)
+        self._bad_keys = []
         if self._fused is not None:
             self._fused.unpersist()
             self._fused = None
@@ -349,7 +361,7 @@ class CompiledPlan:
             raise RuleSetError(f"rule references unknown table `{name}`")
         return self.tables[name]
 
-    def _table_violations(self, rule: Mdl.Rule) -> DataFrame:
+    def _table_violations(self, rule: Mdl.Rule) -> ViolationPart:
         # All scalar-column table rules read the cached narrow projection —
         # never the wide base scan (see fused_projection()).
         fused = self.fused_projection()
@@ -396,8 +408,6 @@ class CompiledPlan:
             )
 
         if isinstance(rule, Mdl.ArrayEqualityRule):
-            from ..functions.arrays import first_mismatch_index
-
             # Hash-screen join: shuffle (key, xxhash64(array)) — 16 bytes a
             # row — instead of the arrays themselves; re-join the arrays only
             # for keys whose hashes disagree (rare corruption). A hash match
@@ -430,56 +440,12 @@ class CompiledPlan:
                 .distinct()
                 .cache()
             )
-            n_bad = bad_keys.count()
-            if n_bad == 0:
-                # clean partition fast path: no array ever leaves the scan
-                return self.spark.createDataFrame([], VIOLATION_SCHEMA)
+            self._bad_keys.append(bad_keys)
             ref = self._aux(rule.reference).select(
                 F.col(rule.key),
                 F.col(rule.ref_column).alias("_ref_arr"),
             )
-            # Tiered by CORRUPTION VOLUME. The dangerous broadcast is the
-            # array-bearing survivors side (keys alone are ~8B/row; arrays
-            # are KBs/row — 5M array rows would blow past driver/broadcast
-            # limits and turn a recoverable burst into a hard failure), so
-            # arrays broadcast only below a much smaller key count.
-            if n_bad <= 100_000:
-                # rare corruption: both probe sides broadcast, neither big
-                # table shuffles — two streaming scans total
-                survivors = self.df.select(
-                    F.col(rule.key), F.col(rule.column)
-                ).join(F.broadcast(bad_keys), on=rule.key, how="inner")
-                joined = ref.join(F.broadcast(survivors), on=rule.key, how="inner")
-            elif n_bad <= 5_000_000:
-                # burst corruption: broadcast the KEY SET into both scans
-                # (bounded: keys only), then shuffle-join the two filtered
-                # sides — each carries only n_bad array rows
-                survivors = self.df.select(
-                    F.col(rule.key), F.col(rule.column)
-                ).join(F.broadcast(bad_keys), on=rule.key, how="inner")
-                ref_flt = ref.join(F.broadcast(bad_keys), on=rule.key, how="inner")
-                joined = survivors.join(ref_flt, on=rule.key, how="inner")
-            else:  # pathological corruption: fall back to shuffled joins
-                joined = (
-                    self.df.select(F.col(rule.key), F.col(rule.column))
-                    .join(bad_keys, on=rule.key, how="inner")
-                    .join(ref, on=rule.key, how="inner")
-                )
-            mism = first_mismatch_index(joined, rule.column, "_ref_arr", key=rule.key)
-            # mismatch_idx == -1 here means the screen flagged a null-vs-
-            # empty pair (hash/size differ) that the diagnosis kernel — and
-            # the DuckDB oracle's index arithmetic — deliberately treat as
-            # EQUAL (null ≡ empty for the array invariant; nullness itself
-            # is the spec/required rules' job). Dropping them is the
-            # contract, not a leak.
-            return mism.filter(F.col("mismatch_idx") >= 0).select(
-                F.col(rule.key).cast("string").alias("subject"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                F.lit(rule.seq).alias("rule_seq"),
-                F.format_string(
-                    "token mismatch at index %d", F.col("mismatch_idx")
-                ).alias("reason"),
-            )
+            return lambda: self._equality_diagnosis(rule, bad_keys, ref)
 
         if isinstance(rule, Mdl.DriftRule):
             return self._drift_violations(rule)
@@ -503,6 +469,62 @@ class CompiledPlan:
             )
 
         raise RuleSetError(f"unknown table rule: {rule}")
+
+    def _equality_diagnosis(
+        self, rule: Mdl.ArrayEqualityRule, bad_keys: DataFrame, ref: DataFrame
+    ) -> DataFrame:
+        """Re-fetch the arrays of the keys that failed the hash screen and
+        find each first mismatch in the Arrow kernel. Counting the bad
+        keys (to pick a tier) is a Spark job, so this runs when the
+        violations are first needed, not at compile time."""
+        from ..functions.arrays import first_mismatch_index
+
+        n_bad = bad_keys.count()
+        if n_bad == 0:
+            # clean partition fast path: no array ever leaves the scan
+            return self.spark.createDataFrame([], VIOLATION_SCHEMA)
+        # Tiered by CORRUPTION VOLUME. The dangerous broadcast is the
+        # array-bearing survivors side (keys alone are ~8B/row; arrays
+        # are KBs/row — 5M array rows would blow past driver/broadcast
+        # limits and turn a recoverable burst into a hard failure), so
+        # arrays broadcast only below a much smaller key count.
+        if n_bad <= 100_000:
+            # rare corruption: both probe sides broadcast, neither big
+            # table shuffles — two streaming scans total
+            survivors = self.df.select(
+                F.col(rule.key), F.col(rule.column)
+            ).join(F.broadcast(bad_keys), on=rule.key, how="inner")
+            joined = ref.join(F.broadcast(survivors), on=rule.key, how="inner")
+        elif n_bad <= 5_000_000:
+            # burst corruption: broadcast the KEY SET into both scans
+            # (bounded: keys only), then shuffle-join the two filtered
+            # sides — each carries only n_bad array rows
+            survivors = self.df.select(
+                F.col(rule.key), F.col(rule.column)
+            ).join(F.broadcast(bad_keys), on=rule.key, how="inner")
+            ref_flt = ref.join(F.broadcast(bad_keys), on=rule.key, how="inner")
+            joined = survivors.join(ref_flt, on=rule.key, how="inner")
+        else:  # pathological corruption: fall back to shuffled joins
+            joined = (
+                self.df.select(F.col(rule.key), F.col(rule.column))
+                .join(bad_keys, on=rule.key, how="inner")
+                .join(ref, on=rule.key, how="inner")
+            )
+        mism = first_mismatch_index(joined, rule.column, "_ref_arr", key=rule.key)
+        # mismatch_idx == -1 here means the screen flagged a null-vs-
+        # empty pair (hash/size differ) that the diagnosis kernel — and
+        # the DuckDB oracle's index arithmetic — deliberately treat as
+        # EQUAL (null ≡ empty for the array invariant; nullness itself
+        # is the spec/required rules' job). Dropping them is the
+        # contract, not a leak.
+        return mism.filter(F.col("mismatch_idx") >= 0).select(
+            F.col(rule.key).cast("string").alias("subject"),
+            F.lit(rule.rule_id).alias("rule_id"),
+            F.lit(rule.seq).alias("rule_seq"),
+            F.format_string(
+                "token mismatch at index %d", F.col("mismatch_idx")
+            ).alias("reason"),
+        )
 
     def _drift_violations(self, rule: Mdl.DriftRule) -> DataFrame:
         from ..functions.sketches import bucketize, ks_statistic
@@ -552,20 +574,30 @@ class CompiledPlan:
 
     # -- full plan --------------------------------------------------------
 
-    def violations(self) -> DataFrame:
-        """Canonical violations DataFrame from ONE pass over the wide scan.
-
-        Row rules + lifted token-range rules explode out of the cached
-        fused projection; every other table rule aggregates/joins the same
-        cached projection. Only the equality diagnosis re-fetch touches an
-        array column a second time, and only for hash-mismatched keys."""
-        parts = [self.row_violations()]
+    def violation_parts(self) -> list[ViolationPart]:
+        """Every rule's violations, built with no Spark job: a DataFrame
+        per rule, except that an equality rule contributes a callable —
+        its re-fetch tier depends on how many keys fail the hash screen,
+        and counting them is a job. Building the parts resolves every
+        table and column, so an invalid spec still fails here."""
+        parts: list[ViolationPart] = [self.row_violations()]
         parts.extend(
             self._table_violations(r)
             for r in self.ruleset.table_rules
             if not isinstance(r, Mdl.TokenRangeRule)  # lifted into the scan
         )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return parts
+
+    def violations(self, parts: list[ViolationPart] | None = None) -> DataFrame:
+        """Canonical violations DataFrame from ONE pass over the wide scan.
+
+        Row rules + lifted token-range rules explode out of the cached
+        fused projection; every other table rule aggregates/joins the same
+        cached projection. Only the equality diagnosis re-fetch touches an
+        array column a second time, and only for hash-mismatched keys.
+        Unions ``parts`` (default: ``violation_parts()``), running each
+        equality rule's bad-key count."""
+        if parts is None:
+            parts = self.violation_parts()
+        frames = [p() if callable(p) else p for p in parts]
+        return functools.reduce(DataFrame.unionByName, frames)

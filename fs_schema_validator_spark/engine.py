@@ -10,6 +10,18 @@ Usage::
     result.grouped_by_subject()   # reference: report.grouped_by_path()
     result.ok_subjects()          # reference: report.valid_paths
     result.summary("source")      # per-partition verdict counts
+    result.release()              # free the run's persisted state
+
+One copy per run: ``validate()`` only compiles (it runs no Spark job).
+The canonical violations — the union of every rule's output — are built
+on the first access to ``result.violations`` or to any report, and are
+persisted (MEMORY_AND_DISK) on the result. The first action fills that
+copy; every report above is a view of it, so the table rules, the
+equality re-fetch and its Arrow kernel run once per result however many
+reports read it. The result holds the copy, the fused projection and the
+equality screen's bad-key cache until ``release()``; long-lived callers
+(streaming batches, services, in-process CLI loops) call it after their
+last report.
 
 The verdict contract mirrors the reference CLI
 (/root/reference/fs_schema_validator/__main__.py:76-96): exit 0 when no
@@ -22,8 +34,9 @@ from typing import Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from .compiler.plan import CompiledPlan
+from .compiler.plan import CompiledPlan, ViolationPart
 from .evaluator import Bindings
 from .rules.loader import RuleSet, RuleSetError
 
@@ -38,9 +51,25 @@ class ValidationResult:
     is Spark's union/aggregation, realized.
     """
 
-    def __init__(self, plan: CompiledPlan, violations: DataFrame) -> None:
+    def __init__(self, plan: CompiledPlan, parts: list[ViolationPart]) -> None:
         self._plan = plan
-        self.violations = violations
+        self._parts = parts  # CompiledPlan.violation_parts()
+        self._violations: DataFrame | None = None
+
+    @property
+    def violations(self) -> DataFrame:
+        """The run's one persisted copy of the canonical violations.
+
+        Built on first access (the equality screen counts its bad keys
+        here to pick a re-fetch tier), filled by the first action on it or
+        on any report derived from it. The union is persisted unsorted:
+        ``sorted_violations()`` sorts the copy, so the sort's sampling job
+        reads it instead of evaluating every rule a second time."""
+        if self._violations is None:
+            self._violations = self._plan.violations(self._parts).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+        return self._violations
 
     def okay(self) -> bool:
         return self.violations.isEmpty()
@@ -75,9 +104,14 @@ class ValidationResult:
         return self._plan.observed_metrics()
 
     def release(self) -> None:
-        """Unpersist the plan's cached fused projection (long-lived
-        sessions — streaming foreachBatch, services — call this after the
-        batch's actions; one-shot CLIs can skip it)."""
+        """Unpersist everything the result persisted: the violations copy,
+        then the plan's equality bad-key caches and fused projection
+        (dependents first, so Spark has no cached plan to re-compile).
+        Long-lived sessions — streaming foreachBatch, services — call this
+        after the batch's actions; a later report rebuilds the copy."""
+        if self._violations is not None:
+            self._violations.unpersist()
+            self._violations = None
         self._plan.release()
 
     def ok_subjects(self) -> DataFrame:
@@ -169,4 +203,4 @@ class ValidationEngine:
         bindings: Bindings | None = None,
     ) -> ValidationResult:
         plan = self.compile(df, rules, tables, bindings)
-        return ValidationResult(plan, plan.violations())
+        return ValidationResult(plan, plan.violation_parts())

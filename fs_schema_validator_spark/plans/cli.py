@@ -19,7 +19,7 @@ import argparse
 import os
 import sys
 
-from ..engine import ValidationEngine
+from ..engine import ValidationEngine, ValidationResult
 from ..evaluator import ParseError, parse_assignment
 from ..rules.loader import RuleSetError
 from ..session import get_spark
@@ -135,7 +135,15 @@ def cmd_validate(args: argparse.Namespace) -> int:
         print("❗️ The provided schema is invalid!", file=sys.stderr)
         print(str(e), file=sys.stderr)
         return 127
+    try:
+        return _report(args, result)
+    finally:
+        result.release()
 
+
+def _report(args: argparse.Namespace, result: ValidationResult) -> int:
+    """Write, summarize and print one result. Every report reads the
+    result's one persisted violations copy; the first action fills it."""
     if args.output:
         result.sorted_violations().write.mode("overwrite").parquet(args.output)
 

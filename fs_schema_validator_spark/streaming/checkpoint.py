@@ -160,18 +160,17 @@ class ResumableValidator:
         subj = F.coalesce(
             F.col(self.engine.subject_col).cast("string"), F.lit("<null>")
         )
-        # ONE narrow pass over (subject, partition) feeds both the
-        # per-partition row counts and the subject->partition attribution
-        # map — only those two columns are read (column pruning), never the
-        # wide payload columns the validation scan already paid for.
+        # (subject, partition) counts feed both the per-partition row
+        # counts and the subject->partition attribution map — only those
+        # two columns are read (column pruning), never the wide payload
+        # columns the validation scan already paid for. Not cached: a
+        # cache build is a job of its own and holds a row per subject,
+        # where the second narrow scan of the two columns costs neither.
         base = (
             sub.select(subj.alias("subject"), part.alias("partition"))
             .groupBy("subject", "partition")
             .agg(F.count(F.lit(1)).alias("n_rows"))
         )
-        from ..functions.cache import track
-
-        base = track(base.cache())
         rows_by_part = base.groupBy("partition").agg(
             F.sum("n_rows").alias("input_rows")
         )
